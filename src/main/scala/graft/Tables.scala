@@ -16,7 +16,7 @@ object Tables {
     * fresh InMemoryFileIndex (a filesystem listing) and re-reads the
     * footer schema on EVERY call — a ~40-90 ms fixed tax per query
     * that a catalog table never pays (the metastore caches the
-    * relation). The r15 overhead bisect (tools.OverheadBisect)
+    * relation). The r15 overhead bisect (BENCH_FLOOR.md §r15)
     * measured this construction cost as the dominant term of the
     * BENCH_FLOOR r14 "fixed-overhead drift" on trivial plans
     * (mixture_sample: 0.075 s construct vs 0.009 s plan + 0.056 s

@@ -19,17 +19,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions.{checkArity, foldableInt}
 
+  /** Registers the native functions, the TopK planner strategy and
+    * its optimizer rule. The r15 overhead bisect (BENCH_FLOOR.md §r15)
+    * timed these layers separately and found that none of them adds
+    * planning cost. */
   override def apply(ext: SparkSessionExtensions): Unit = {
-    applyFunctionsOnly(ext)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
-  }
-
-  /** The function registrations alone, without the TopK planner
-    * strategy / optimizer rule — split out so diagnosis harnesses
-    * (tools.OverheadBisect) can wire each extension layer separately
-    * when bisecting per-query planning overhead. */
-  def applyFunctionsOnly(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
       FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
@@ -156,7 +150,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) => {
         val usage = "graft_round(x, scale)"
         checkArity("graft_round", usage, exprs, 2)
-        RoundHalfUp(exprs(0), foldableInt(usage, "scale", exprs(1)))
+        val scale = foldableInt(usage, "scale", exprs(1))
+        if (scale < 0 || scale > 15)
+          throw new IllegalArgumentException(
+            s"$usage: scale must be in [0, 15], got $scale")
+        RoundHalfUp(exprs(0), scale)
       }))
     ext.injectFunction((
       FunctionIdentifier("graft_kll_err_bound"),
@@ -167,6 +165,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           exprs, 1)
         KllErrBound(exprs(0))
       }))
+    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
   }
 }
 

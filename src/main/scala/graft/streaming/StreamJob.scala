@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -118,65 +122,142 @@ object StreamJob {
   def parquetAppender(baseDir: String): Appender =
     (table, df) => df.write.mode("append").parquet(s"$baseDir/$table")
 
+  // ---------- streaming state: one store, one commit protocol ----------
+  //
+  // Every incremental sink below persists through [[DeltaStore]] and is
+  // driven by the one `foreachBatch` body in [[startDeltaSink]] — the
+  // Structured Streaming exactly-once recipe: a replayable source, a
+  // sink idempotent by path, and one commit log (the store's `latest`
+  // pointer). foreachBatch is at-least-once (a batch REPLAYS after
+  // checkpoint recovery); a replayed id the store already committed is
+  // a no-op, and a crashed, uncommitted batch rewrites its own paths.
+
+  /** Append-only per-batch delta store — the ONE streaming store. Each
+    * batch overwrites only its own `b<batchId>/<sub>` parquet dirs (one
+    * per registered sub-frame), then the `latest` pointer commits it.
+    * Readers union the `compacted` base with every committed delta not
+    * folded into it, so a crashed batch's half-written dirs and a stray
+    * `c<id>` base whose pointer never flipped are never read. Appends of
+    * distinct batch ids commute, so the per-batch write is O(batch).
+    *
+    * Pointers are replaced by atomic rename (`<name>.tmp`, then move):
+    * a crash mid-commit leaves the previous id, never an empty file.
+    * [[compact]] is the one explicit O(state) fold. */
+  class DeltaStore(spark: SparkSession, dir: String, subs: Seq[String]) {
+    require(subs.nonEmpty && subs.distinct == subs)
+    private val root = Paths.get(dir)
+    private def readPtr(name: String): Long = {
+      val p = root.resolve(name)
+      if (Files.exists(p)) new String(Files.readAllBytes(p), UTF_8).trim.toLong
+      else -1L
+    }
+    /** The one pointer writer: a stale `<name>.tmp` left by a crash is
+      * overwritten, then renamed over `<name>` in one step. */
+    private def writePtr(name: String, id: Long): Unit = {
+      val tmp = root.resolve(s"$name.tmp")
+      Files.write(tmp, s"$id\n".getBytes(UTF_8))
+      Files.move(tmp, root.resolve(name), ATOMIC_MOVE, REPLACE_EXISTING)
+    }
+    private def rm(f: File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rm)
+      f.delete(); ()
+    }
+    /** Ids of every `b<id>` dir on disk, committed or not. */
+    private def deltaIds(): Seq[Long] =
+      Option(root.toFile.listFiles()).getOrElse(Array.empty[File]).toSeq
+        .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
+        .map(_.getName.drop(1).toLong)
+    /** Committed deltas the base `c<comp>` does not cover, in order. */
+    private def liveDeltaIds(comp: Long): Seq[Long] = {
+      val last = lastBatchId()
+      deltaIds().filter(id => id > comp && id <= last).sorted
+    }
+    def lastBatchId(): Long = readPtr("latest")
+    def compactedId(): Long = readPtr("compacted")
+    /** Committed delta dirs not yet folded into a compacted base — the
+      * small-file pressure gauge the `compactEvery` policy triggers on.
+      * Driver-side name listing only. */
+    def deltaCount(): Int = liveDeltaIds(compactedId()).size
+    /** The every-N-batches policy: fold when the uncompacted delta
+      * count reaches `every` (0 disables), so a long-running stream's
+      * `b<id>` dir count stays bounded by `every`. */
+    def maybeCompact(every: Int): Unit =
+      if (every > 0 && deltaCount() >= every) compact()
+    /** Committed storage paths for one sub-frame: the compacted base
+      * (if any) plus every live delta. */
+    private def parts(sub: String): Seq[String] = {
+      val comp = compactedId()
+      (if (comp >= 0L) Seq(s"$dir/c$comp/$sub") else Seq.empty) ++
+        liveDeltaIds(comp).map(id => s"$dir/b$id/$sub")
+    }
+    def readSub(sub: String): Option[DataFrame] = {
+      require(subs.contains(sub), s"unknown sub-frame $sub")
+      // keep only paths that exist: a sub-frame ADDED to the layout
+      // after a store was first written (the r16 "codes" addition) is
+      // absent from older batch dirs — those batches contribute no
+      // rows rather than a PATH_NOT_FOUND throw
+      val ps = parts(sub).filter(p => Files.exists(Paths.get(p)))
+      if (ps.isEmpty) None else Some(spark.read.parquet(ps: _*))
+    }
+    /** [[readSub]] for readers that need rows: fails when no committed
+      * batch holds `sub`. */
+    def read(sub: String): DataFrame = readSub(sub).getOrElse(
+      throw new IllegalStateException(s"no committed $sub under $dir"))
+    /** Write one batch's deltas (every registered sub, in `subs`
+      * order), then commit them by moving the `latest` pointer. */
+    def writeDelta(frames: Seq[DataFrame], batchId: Long): Unit = {
+      require(frames.length == subs.length,
+        s"expected ${subs.length} frames, got ${frames.length}")
+      subs.zip(frames).foreach { case (sub, df) =>
+        df.write.mode("overwrite").parquet(s"$dir/b$batchId/$sub")
+      }
+      writePtr("latest", batchId)
+    }
+    /** Fold base + deltas into one `c<lastBatchId>` dir and drop the
+      * folded sources. Crash-safe like the deltas: the new base is
+      * written fully, the `compacted` pointer moves, THEN the
+      * superseded dirs are removed. */
+    def compact(): Unit = {
+      val last = lastBatchId()
+      if (last < 0L || parts(subs.head).size <= 1) return
+      val prevComp = compactedId()
+      for (sub <- subs)
+        readSub(sub).get.write.mode("overwrite").parquet(s"$dir/c$last/$sub")
+      writePtr("compacted", last)
+      deltaIds().filter(_ <= last)
+        .foreach(id => rm(root.resolve(s"b$id").toFile))
+      if (prevComp >= 0L) rm(root.resolve(s"c$prevComp").toFile)
+    }
+  }
+
+  /** Delta-store compaction cadence of the state sinks. */
+  private val DefaultCompactEvery = 16
+
+  /** The one `foreachBatch` body of every state sink: a batch id the
+    * store already committed is a replay and a no-op; otherwise the
+    * batch's delta frames (one per store sub, in order) are written
+    * and committed, then the every-N fold runs. */
+  private def startDeltaSink(df: DataFrame, store: DeltaStore,
+      checkpointDir: String, compactEvery: Int = DefaultCompactEvery)(
+      delta: DataFrame => Seq[DataFrame]): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (batchId > store.lastBatchId()) {
+          store.writeDelta(delta(batch), batchId)
+          store.maybeCompact(compactEvery)
+        }
+        ()
+      }
+      .start()
+
   // ---------- incremental daily rollup sink ----------
   //
   // EventOps.incrementalDailyStats lifted into the stream: the
   // reference appends per-batch PARTIAL rows and defers the merge to
   // every reader (`streamed_toot_counts`, src/spark_stream.py:119-131
-  // — totals need a downstream SUM GROUP BY); the idiomatic end-state
-  // maintains the merged rollup itself, one MERGE per micro-batch.
-
-  /** Durable rollup state for [[startIncrementalDaily]]. */
-  trait RollupStore {
-    /** Current rollup snapshot; None before the first merge. */
-    def read(): Option[DataFrame]
-    /** Highest batch id already merged; -1 when fresh. */
-    def lastBatchId(): Long
-    /** Replace the rollup with the merge result for `batchId`.
-      * Implementations must fully materialize `rollup` before exposing
-      * it as the new current snapshot. */
-    def write(rollup: DataFrame, batchId: Long): Unit
-  }
-
-  /** Versioned-directory parquet [[RollupStore]]: each merge writes
-    * `dir/v<batchId>` and then flips the tiny `latest` pointer file —
-    * the previous snapshot is never overwritten mid-scan (the merge
-    * READS it while writing the new version), and a crash between
-    * write and flip leaves the old snapshot current with the new
-    * directory orphaned, to be rewritten idempotently on replay. */
-  class ParquetRollupStore(spark: SparkSession, dir: String)
-      extends RollupStore {
-    private val ptr = java.nio.file.Paths.get(dir, "latest")
-    def lastBatchId(): Long =
-      if (java.nio.file.Files.exists(ptr))
-        new String(java.nio.file.Files.readAllBytes(ptr), "UTF-8").trim.toLong
-      else -1L
-    def read(): Option[DataFrame] = lastBatchId() match {
-      case -1L => None
-      case id  => Some(spark.read.parquet(s"$dir/v$id"))
-    }
-    def write(rollup: DataFrame, batchId: Long): Unit = {
-      val prev = lastBatchId()
-      rollup.write.mode("overwrite").parquet(s"$dir/v$batchId")
-      java.nio.file.Files.write(ptr, s"$batchId\n".getBytes("UTF-8"))
-      // retention: keep the snapshot just superseded (crash-recovery
-      // margin — a reader may still be mid-scan on it) and drop
-      // everything older, so the store holds ≤2 versions instead of
-      // one directory per batch forever
-      val keep = Set(s"v$batchId", s"v$prev")
-      val d = new java.io.File(dir)
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("v") &&
-          !keep.contains(f.getName))
-        .foreach { f =>
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-            x.delete(); ()
-          }
-          rm(f)
-        }
-    }
-  }
+  // — totals need a downstream SUM GROUP BY); here the store holds the
+  // exact partials and [[dailyRollup]] merges them.
 
   /** Daily delta partials of one micro-batch of prepared toots:
     * (day, toots, chars). Counts and Long char sums merge EXACTLY, so
@@ -188,180 +269,44 @@ object StreamJob {
     .agg(count(lit(1)).as("toots"), sum(length(col("text"))).as("chars"))
 
   /** Associative partial merge — the same union-then-reaggregate shape
-    * as `EventOps.incrementalDailyStats`, over ≤ 2·|days| rows. */
-  def mergeDaily(base: DataFrame, delta: DataFrame): DataFrame =
-    base.unionByName(delta)
-      .groupBy("day")
+    * as `EventOps.incrementalDailyStats`: any union of daily partials
+    * collapses to one row per day. */
+  def mergeDaily(partials: DataFrame): DataFrame =
+    partials.groupBy("day")
       .agg(sum("toots").as("toots"), sum("chars").as("chars"))
 
   /** Streaming maintenance of the daily rollup: each micro-batch
-    * computes its delta partials and merges them into the stored
-    * rollup. The 100 TB shape: the store is ∝ |days|, the delta
-    * touches only the batch — history is NEVER rescanned, exactly the
-    * incrementalDailyStats contract driven by a stream.
-    *
-    * Exactly-once: foreachBatch is at-least-once (a batch REPLAYS
-    * after checkpoint recovery); the store records the batch id each
-    * snapshot merged, so a replayed id is a no-op instead of a
-    * double-count — idempotent because [[ParquetRollupStore]] rewrites
-    * `v<batchId>` and flips the pointer only after the write lands. */
-  def startIncrementalDaily(prepared: DataFrame, store: RollupStore,
+    * appends its delta partials to `store`, a [[DeltaStore]] with the
+    * one sub-frame `daily`. History is NEVER rescanned: the per-batch
+    * write is ≤ |days in the batch| rows. */
+  def startIncrementalDaily(prepared: DataFrame, store: DeltaStore,
       checkpointDir: String): StreamingQuery =
-    prepared.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > store.lastBatchId()) {
-          val merged = store.read() match {
-            case Some(base) => mergeDaily(base, dailyDelta(batch))
-            case None       => dailyDelta(batch)
-          }
-          store.write(merged, batchId)
-        }
-        ()
-      }
-      .start()
+    startDeltaSink(prepared, store, checkpointDir)(b => Seq(dailyDelta(b)))
+
+  /** The rollup of a [[startIncrementalDaily]] store: [[mergeDaily]]
+    * over the committed partials; None before the first commit. */
+  def dailyRollup(store: DeltaStore): Option[DataFrame] =
+    store.readSub("daily").map(mergeDaily)
 
   // ---------- incremental near-dup maintenance sink ----------
   //
   // DedupOps.incrementalNearDups driven by the stream: each
   // micro-batch of documents is paired against the persisted corpus
   // (and itself) WITHOUT ever re-pairing old-vs-old — the
-  // continual-ingestion dedup story end-to-end. Same read-modify-write
-  // posture as [[startIncrementalDaily]]: versioned snapshots + a
-  // batch-id guard make the at-least-once foreachBatch replay a no-op.
+  // continual-ingestion dedup story end-to-end.
 
-  /** Durable state for [[startIncrementalNearDups]]: APPEND-ONLY
-    * per-batch delta dirs `dir/b<batchId>/{docs,index,pairs}` — the
-    * exact contract [[startDistinctDailySketches]] uses. Each batch
-    * writes only its OWN delta (docs genuinely new in the batch, their
-    * banded signature index rows, the pairs they introduced), so the
-    * per-batch write is O(batch), never O(corpus) — the r12 verdict's
-    * one remaining corpus-rewrite plan. Appends of distinct batch ids
-    * commute: pairs are disjoint across batches (each touches ≥1 doc
-    * new in its batch), docs/index rows are disjoint by the
-    * re-delivery anti-join — so readers simply union the deltas.
-    *
-    * Crash/replay safety: a batch overwrites its own `b<id>` paths
-    * (idempotent by path), and the tiny `latest` pointer flips LAST —
-    * a crash mid-batch leaves `latest` at the previous id, the
-    * half-written delta invisible to readers, and the replay rewrites
-    * it in place. A replayed batch id ≤ `latest` is a no-op.
-    *
-    * [[compact]] folds the accumulated deltas into one `c<id>` base
-    * (small-file hygiene after many micro-batches); readers then union
-    * base + post-compaction deltas. The INDEX is the production
+  /** Durable state for [[startIncrementalNearDups]]: per-batch
+    * `b<batchId>/{docs,index,codes,pairs}` deltas. Each batch writes
+    * only its OWN delta (docs genuinely new in the batch, their banded
+    * signature index rows, their codes, the pairs they introduced), so
+    * the per-batch write is O(batch), never O(corpus). Pairs are
+    * disjoint across batches (each touches ≥1 doc new in its batch),
+    * docs/index rows are disjoint by the re-delivery anti-join — so
+    * readers simply union the deltas. The INDEX is the production
     * artifact ([[graft.ops.DedupOps.incrementalNearDupsIndexed]]):
     * the per-batch anti-join and the pairing probe it — narrow rows,
     * a key plus two longs — and the stored TEXT is only read through
     * the candidate-id semi-join of the verification pass. */
-  /** GENERIC append-only per-batch delta store — the contract
-    * [[NearDupStore]] pioneered, factored for every incremental
-    * maintenance sink: each batch overwrites only its own
-    * `b<batchId>/<sub>` parquet dirs (one per registered sub-frame),
-    * the tiny `latest` pointer flips LAST, readers union base +
-    * committed deltas, and [[compact]] is the one explicit O(state)
-    * fold. A replayed or crashed batch rewrites its own paths —
-    * idempotent by construction. */
-  class DeltaStore(spark: SparkSession, dir: String, subs: Seq[String]) {
-    require(subs.nonEmpty && subs.distinct == subs)
-    private val ptr = java.nio.file.Paths.get(dir, "latest")
-    private val cptr = java.nio.file.Paths.get(dir, "compacted")
-    private def readPtr(p: java.nio.file.Path): Long =
-      if (java.nio.file.Files.exists(p))
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong
-      else -1L
-    def lastBatchId(): Long = readPtr(ptr)
-    def compactedId(): Long = readPtr(cptr)
-    /** Committed delta dirs not yet folded into a compacted base —
-      * the small-file pressure gauge the auto-compaction policy
-      * ([[startIncrementalNearDups]]/[[startIncrementalJoin]]
-      * `compactEvery`) triggers on. Driver-side name listing only. */
-    def deltaCount(): Int = {
-      val last = lastBatchId()
-      val comp = compactedId()
-      Option(new java.io.File(dir).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .count(f => f.isDirectory && f.getName.matches("b\\d+") && {
-          val id = f.getName.drop(1).toLong
-          id > comp && id <= last
-        })
-    }
-    /** The every-N-batches policy: fold when the uncompacted delta
-      * count reaches `every` (0 disables). Called by the sinks after
-      * each committed batch, so a long-running stream's `b<id>` dir
-      * count stays bounded by `every` instead of growing without
-      * limit; crash safety is [[compact]]'s pointer-flip discipline
-      * (a crash mid-fold leaves the old base + deltas intact). */
-    def maybeCompact(every: Int): Unit =
-      if (every > 0 && deltaCount() >= every) compact()
-    /** Committed storage paths for one sub-frame: the compacted base
-      * (if any) plus every delta it doesn't cover. Driver-side listing
-      * of ≤ #batches dir names — bounded, and compaction keeps it
-      * short. */
-    private def parts(sub: String): Seq[String] = {
-      val last = lastBatchId()
-      val comp = compactedId()
-      val base = if (comp >= 0L) Seq(s"$dir/c$comp/$sub") else Seq.empty
-      val deltas = Option(new java.io.File(dir).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
-        .map(_.getName.drop(1).toLong)
-        .filter(id => id > comp && id <= last)
-        .sorted
-        .map(id => s"$dir/b$id/$sub")
-      base ++ deltas
-    }
-    def readSub(sub: String): Option[DataFrame] = {
-      require(subs.contains(sub), s"unknown sub-frame $sub")
-      // keep only paths that exist: a sub-frame ADDED to the layout
-      // after a store was first written (the r16 "codes" addition) is
-      // absent from older batch dirs — those batches contribute no
-      // rows rather than a PATH_NOT_FOUND throw. Driver-side stat of
-      // ≤ #batches dirs, same bound as parts() itself.
-      val ps = parts(sub)
-        .filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-      if (ps.isEmpty) None else Some(spark.read.parquet(ps: _*))
-    }
-    /** Write one batch's deltas (every registered sub, in `subs`
-      * order) then flip the pointer. */
-    def writeDelta(frames: Seq[DataFrame], batchId: Long): Unit = {
-      require(frames.length == subs.length,
-        s"expected ${subs.length} frames, got ${frames.length}")
-      subs.zip(frames).foreach { case (sub, df) =>
-        df.write.mode("overwrite").parquet(s"$dir/b$batchId/$sub")
-      }
-      java.nio.file.Files.write(ptr, s"$batchId\n".getBytes("UTF-8"))
-    }
-    /** Fold base + deltas into one `c<lastBatchId>` dir and drop the
-      * folded sources. The ONLY O(state) operation in the store, run
-      * when the operator chooses (e.g. every N batches), never
-      * implicitly per batch. Crash-safe like the deltas: the new base
-      * is written fully, the `compacted` pointer flips, THEN the
-      * superseded dirs are removed. */
-    def compact(): Unit = {
-      val last = lastBatchId()
-      if (last < 0L || parts(subs.head).size <= 1) return
-      val prevComp = compactedId()
-      for (sub <- subs)
-        readSub(sub).get.write.mode("overwrite")
-          .parquet(s"$dir/c$last/$sub")
-      java.nio.file.Files.write(cptr, s"$last\n".getBytes("UTF-8"))
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-        x.delete(); ()
-      }
-      Option(new java.io.File(dir).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter { f =>
-          f.isDirectory && (
-            (f.getName.matches("b\\d+") &&
-              f.getName.drop(1).toLong <= last) ||
-            (f.getName == s"c$prevComp" && prevComp >= 0L))
-        }
-        .foreach(rm)
-    }
-  }
-
   class NearDupStore(spark: SparkSession, dir: String)
       extends DeltaStore(spark, dir,
         Seq("docs", "index", "codes", "pairs")) {
@@ -371,9 +316,6 @@ object StreamJob {
       * stored artifact (8 bytes/doc beside the band index). */
     def readCodes(): Option[DataFrame] = readSub("codes")
     def readPairs(): Option[DataFrame] = readSub("pairs")
-    def writeDelta(docs: DataFrame, index: DataFrame, codes: DataFrame,
-        pairs: DataFrame, batchId: Long): Unit =
-      writeDelta(Seq(docs, index, codes, pairs), batchId)
   }
 
   /** Streaming near-dup maintenance: every micro-batch's genuinely-new
@@ -421,55 +363,49 @@ object StreamJob {
   def startIncrementalNearDups(docs: DataFrame, store: NearDupStore,
       checkpointDir: String, threshold: Double = 0.5,
       numHashes: Int = 32, bands: Int = 8, k: Int = 3,
-      compactEvery: Int = 16, maxHamming: Int = 26): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > store.lastBatchId()) {
-          val incoming = batch.select(col("doc_id"), col("text"))
-            .filter(col("doc_id").isNotNull && col("text").isNotNull)
-            .dropDuplicates("doc_id")
-          // fresh and its index feed both the pairing and the delta
-          // write — checkpoint each once (batch-sized frames)
-          val fresh = (store.readIndex() match {
-            case Some(oldIdx) => incoming.join(
-              oldIdx.select("doc_id"), Seq("doc_id"), "left_anti")
-            case None => incoming
-          }).localCheckpoint()
-          val idx = graft.ops.DedupOps
-            .minhashBands(fresh, numHashes, bands, k).localCheckpoint()
-          val codes = graft.ops.DedupOps.simhashes(fresh)
-            .localCheckpoint()
-          val newPairs = store.readIndex() match {
-            case Some(oldIdx) =>
-              // Pre-tier store layouts (docs/index/pairs, no "codes"
-              // sub-frame) resume gracefully: SimHash is a pure
-              // per-doc function of text, so missing codes are
-              // recomputed from the stored docs instead of throwing.
-              // A MIXED store (legacy batches + tiered batches) reads
-              // as partial codes — the tier's left-join null-pass
-              // (DedupOps.candsOf) sends code-less candidates to
-              // exact verification unpruned, so coverage gaps cost
-              // pruning, never recall.
-              val oldDocs = store.readDocs().get
-              val oldCodes = store.readCodes()
-                .getOrElse(graft.ops.DedupOps.simhashes(oldDocs))
-              graft.ops.DedupOps.incrementalNearDupsHammingTier(
-                oldIdx, oldCodes, oldDocs,
-                fresh, idx, codes, threshold, maxBucket = 500, k = k,
-                maxHamming = maxHamming)
-            case None =>
-              graft.ops.DedupOps.incrementalNearDupsHammingTier(
-                idx.limit(0), codes.limit(0), fresh.limit(0), fresh,
-                idx, codes, threshold, maxBucket = 500, k = k,
-                maxHamming = maxHamming)
-          }
-          store.writeDelta(fresh, idx, codes, newPairs, batchId)
-          store.maybeCompact(compactEvery)
-        }
-        ()
+      compactEvery: Int = DefaultCompactEvery,
+      maxHamming: Int = 26): StreamingQuery =
+    startDeltaSink(docs, store, checkpointDir, compactEvery) { batch =>
+      val incoming = batch.select(col("doc_id"), col("text"))
+        .filter(col("doc_id").isNotNull && col("text").isNotNull)
+        .dropDuplicates("doc_id")
+      // fresh and its index feed both the pairing and the delta
+      // write — checkpoint each once (batch-sized frames)
+      val fresh = (store.readIndex() match {
+        case Some(oldIdx) => incoming.join(
+          oldIdx.select("doc_id"), Seq("doc_id"), "left_anti")
+        case None => incoming
+      }).localCheckpoint()
+      val idx = graft.ops.DedupOps
+        .minhashBands(fresh, numHashes, bands, k).localCheckpoint()
+      val codes = graft.ops.DedupOps.simhashes(fresh)
+        .localCheckpoint()
+      val newPairs = store.readIndex() match {
+        case Some(oldIdx) =>
+          // Pre-tier store layouts (docs/index/pairs, no "codes"
+          // sub-frame) resume gracefully: SimHash is a pure
+          // per-doc function of text, so missing codes are
+          // recomputed from the stored docs instead of throwing.
+          // A MIXED store (legacy batches + tiered batches) reads
+          // as partial codes — the tier's left-join null-pass
+          // (DedupOps.candsOf) sends code-less candidates to
+          // exact verification unpruned, so coverage gaps cost
+          // pruning, never recall.
+          val oldDocs = store.readDocs().get
+          val oldCodes = store.readCodes()
+            .getOrElse(graft.ops.DedupOps.simhashes(oldDocs))
+          graft.ops.DedupOps.incrementalNearDupsHammingTier(
+            oldIdx, oldCodes, oldDocs,
+            fresh, idx, codes, threshold, maxBucket = 500, k = k,
+            maxHamming = maxHamming)
+        case None =>
+          graft.ops.DedupOps.incrementalNearDupsHammingTier(
+            idx.limit(0), codes.limit(0), fresh.limit(0), fresh,
+            idx, codes, threshold, maxBucket = 500, k = k,
+            maxHamming = maxHamming)
       }
-      .start()
+      Seq(fresh, idx, codes, newPairs)
+    }
 
   /** Incremental equi-JOIN view maintenance — classic IVM (the delta
     * rule every materialized-view engine implements): the view
@@ -495,37 +431,31 @@ object StreamJob {
     * state store cannot hold (joining today's rows against ALL
     * history). */
   def startIncrementalJoin(changes: DataFrame, store: DeltaStore,
-      checkpointDir: String, compactEvery: Int = 16): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > store.lastBatchId()) {
-          val in = batch.select(col("tbl"), col("k"), col("id"))
-            .filter(col("tbl").isin("a", "b") &&
-              col("k").isNotNull && col("id").isNotNull)
-            .dropDuplicates("tbl", "id")
-          def side(tag: String, idName: String): DataFrame = {
-            val d = in.filter(col("tbl") === tag)
-              .select(col("k"), col("id").as(idName))
-            (store.readSub(tag) match {
-              case Some(old) =>
-                d.join(old.select(idName), Seq(idName), "left_anti")
-              case None => d
-            }).localCheckpoint()
-          }
-          val dA = side("a", "a_id")
-          val dB = side("b", "b_id")
-          val aOld = store.readSub("a").getOrElse(dA.limit(0))
-          val bOld = store.readSub("b").getOrElse(dB.limit(0))
-          val dV = dA.join(bOld.unionByName(dB), Seq("k"))
-            .unionByName(aOld.join(dB, Seq("k")))
-            .select(col("k"), col("a_id"), col("b_id"))
-          store.writeDelta(Seq(dA, dB, dV), batchId)
-          store.maybeCompact(compactEvery)
-        }
-        ()
+      checkpointDir: String,
+      compactEvery: Int = DefaultCompactEvery): StreamingQuery =
+    startDeltaSink(changes, store, checkpointDir, compactEvery) { batch =>
+      val in = batch.select(col("tbl"), col("k"), col("id"))
+        .filter(col("tbl").isin("a", "b") &&
+          col("k").isNotNull && col("id").isNotNull)
+        .dropDuplicates("tbl", "id")
+      def side(tag: String, idName: String): DataFrame = {
+        val d = in.filter(col("tbl") === tag)
+          .select(col("k"), col("id").as(idName))
+        (store.readSub(tag) match {
+          case Some(old) =>
+            d.join(old.select(idName), Seq(idName), "left_anti")
+          case None => d
+        }).localCheckpoint()
       }
-      .start()
+      val dA = side("a", "a_id")
+      val dB = side("b", "b_id")
+      val aOld = store.readSub("a").getOrElse(dA.limit(0))
+      val bOld = store.readSub("b").getOrElse(dB.limit(0))
+      val dV = dA.join(bOld.unionByName(dB), Seq("k"))
+        .unionByName(aOld.join(dB, Seq("k")))
+        .select(col("k"), col("a_id"), col("b_id"))
+      Seq(dA, dB, dV)
+    }
 
   // ---------- distinct-count sketch-blob sink ----------
   //
@@ -544,37 +474,33 @@ object StreamJob {
     .groupBy(to_date(col("created_at")).as("day"))
     .agg(expr("theta_sketch_agg(username)").as("sk"))
 
-  /** Append-only sketch sink: each micro-batch OVERWRITES its own
-    * `b<batchId>` subdirectory, so an at-least-once replay after
-    * checkpoint recovery rewrites the same blobs instead of
-    * double-appending — idempotence by path, no pointer file needed
-    * (unlike the read-modify-write rollup store, appends of distinct
-    * batch ids commute). */
+  /** The one-sub [[DeltaStore]] behind each single-blob sink: every
+    * micro-batch appends its blob frame as a committed delta, and
+    * readers merge only committed blobs. */
+  private def blobStore(spark: SparkSession, dir: String): DeltaStore =
+    new DeltaStore(spark, dir, Seq("blob"))
+
+  private def blobs(spark: SparkSession, dir: String): DataFrame =
+    blobStore(spark, dir).read("blob")
+
+  /** Append-only sketch sink under `dir` ([[blobStore]]). */
   def startDistinctDailySketches(prepared: DataFrame, dir: String,
       checkpointDir: String): StreamingQuery =
-    prepared.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          sketchDelta(batch).write.mode("overwrite").parquet(s"$dir/b$batchId")
-        }
-        ()
-      }
-      .start()
+    startDeltaSink(prepared, blobStore(prepared.sparkSession, dir),
+      checkpointDir)(b => Seq(sketchDelta(b)))
 
   /** Distinct usernames per day answered from the STORED blobs only —
     * no raw-row rescan, any date grain (regroup `day` coarser and the
     * same union still holds: sketches are associative). */
   def distinctDailyFromSketches(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/b*")
+    blobs(spark, dir)
       .groupBy("day")
       .agg(expr("CAST(theta_sketch_estimate(theta_union_agg(sk)) AS BIGINT)")
         .as("n_users"))
 
   /** EXACT-distinct variant of the sketch-blob store: per-batch
-    * per-day dense BITMAP blobs ([[graft.functions.BitmapBuild]])
-    * under the same idempotent-by-path append contract as
-    * [[startDistinctDailySketches]]. Where the Theta store answers
+    * per-day dense BITMAP blobs ([[graft.functions.BitmapBuild]]) in
+    * the same kind of [[blobStore]]. Where the Theta store answers
     * any-grain distincts within sketch tolerance, the bitmap store's
     * blob-OR is lossless — the stored partials reproduce
     * `count(DISTINCT)` exactly at any regrouping, which is the
@@ -591,23 +517,15 @@ object StreamJob {
   def startDistinctDailyBitmaps(prepared: DataFrame, dir: String,
       checkpointDir: String, idCol: String, tsCol: String,
       maxId: Int): StreamingQuery =
-    prepared.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          bitmapDelta(batch, idCol, tsCol, maxId)
-            .write.mode("overwrite").parquet(s"$dir/b$batchId")
-        }
-        ()
-      }
-      .start()
+    startDeltaSink(prepared, blobStore(prepared.sparkSession, dir),
+      checkpointDir)(b => Seq(bitmapDelta(b, idCol, tsCol, maxId)))
 
   /** Exact distinct ids per day from the STORED blobs only — no raw
     * rescan; regroup coarser (week, month, all-time) and the same
     * OR-merge still answers exactly. */
   def distinctDailyFromBitmaps(spark: SparkSession, dir: String,
       maxId: Int): DataFrame =
-    spark.read.parquet(s"$dir/b*")
+    blobs(spark, dir)
       .groupBy("day")
       .agg(graft.functions.BitmapAgg.bitmapCardinality(col("bm"), maxId)
         .as("n_users"))
@@ -616,8 +534,7 @@ object StreamJob {
     * of the store-once/union-any-grain family (Theta for distincts,
     * bitmap for exact distincts, Misra–Gries for heavy hitters, this
     * for percentiles): each micro-batch appends its own (day, bin)
-    * count frame under the idempotent-by-path `b<batchId>` contract.
-    * Integer-width bins make the partials EXACT and trivially
+    * count frame to a [[blobStore]]. Integer-width bins make the partials EXACT and trivially
     * mergeable — readers re-collapse the stored blobs at ANY grain
     * (day, week, all-time) and answer binned quantiles with no raw-row
     * rescan and no sketch tolerance, the [[graft.ops.EventOps
@@ -633,16 +550,8 @@ object StreamJob {
   def startValueHistogramBlobs(prepared: DataFrame, dir: String,
       checkpointDir: String, valueCol: String = "value",
       tsCol: String = "created_at"): StreamingQuery =
-    prepared.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          histogramDelta(batch, valueCol, tsCol)
-            .write.mode("overwrite").parquet(s"$dir/b$batchId")
-        }
-        ()
-      }
-      .start()
+    startDeltaSink(prepared, blobStore(prepared.sparkSession, dir),
+      checkpointDir)(b => Seq(histogramDelta(b, valueCol, tsCol)))
 
   /** Exact binned quantiles from the STORED histogram blobs only —
     * for each requested q, the smallest bin whose cumulative count
@@ -655,7 +564,7 @@ object StreamJob {
       qs: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val h = spark.read.parquet(s"$dir/b*")
+    val h = blobs(spark, dir)
       .groupBy("bin").agg(sum("cnt").as("cnt"))
     val w = Window.orderBy(col("bin").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -673,10 +582,9 @@ object StreamJob {
     * of [[histogramDelta]] (whose exact bins need an integer-width
     * grid): each micro-batch appends one per-day KLL sketch blob
     * ([[graft.functions.KllBuild]], see [[graft.functions.KllSketch]]
-    * for the worst-case-rank-error contract) under the
-    * idempotent-by-path `b<batchId>` contract. Readers merge blobs at
-    * ANY grain (day, week, all-time) with [[graft.functions.KllMerge]]
-    * — error bounds ADD across merges, so the answer ships with its
+    * for the worst-case-rank-error contract) to a [[blobStore]].
+    * Readers merge blobs at ANY grain (day, week, all-time) with
+    * [[graft.functions.KllMerge]] — error bounds ADD across merges, so the answer ships with its
     * own validity certificate and no raw row is ever rescanned. */
   def kllDelta(batch: DataFrame, valueCol: String, tsCol: String,
       k: Int = 200): DataFrame = batch
@@ -688,16 +596,8 @@ object StreamJob {
   def startValueKllBlobs(prepared: DataFrame, dir: String,
       checkpointDir: String, valueCol: String = "value",
       tsCol: String = "created_at", k: Int = 200): StreamingQuery =
-    prepared.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          kllDelta(batch, valueCol, tsCol, k)
-            .write.mode("overwrite").parquet(s"$dir/b$batchId")
-        }
-        ()
-      }
-      .start()
+    startDeltaSink(prepared, blobStore(prepared.sparkSession, dir),
+      checkpointDir)(b => Seq(kllDelta(b, valueCol, tsCol, k)))
 
   /** Quantiles per day from the STORED KLL blobs only — one
     * blob-merge per day plus scalar quantile reads, each row carrying
@@ -706,7 +606,7 @@ object StreamJob {
   def quantilesDailyFromKllBlobs(spark: SparkSession, dir: String,
       qs: Seq[Double] = Seq(0.5, 0.9, 0.99), k: Int = 200): DataFrame = {
     import graft.functions.KllSketch._
-    val merged = spark.read.parquet(s"$dir/b*")
+    val merged = blobs(spark, dir)
       .groupBy("day")
       .agg(kllMerge(col("kll"), k).as("kb"))
     val qCols = qs.map(q =>
@@ -715,13 +615,15 @@ object StreamJob {
       kllErrBound(col("kb")).as("rank_err_bound")) ++ qCols: _*)
   }
 
+  private def mgStore(spark: SparkSession, dir: String): DeltaStore =
+    new DeltaStore(spark, dir, Seq("summary", "meta"))
+
   /** Streaming heavy-hitter maintenance — the MERGEABLE face of
     * [[graft.ops.DocOps.heavyHitterTerms]] (whose exact-recount second
     * pass a stream cannot make): each micro-batch appends its own
-    * Misra–Gries summary blob (≤ k narrow rows + a 1-row token total)
-    * under the same idempotent-by-path `b<batchId>` contract as
-    * [[startDistinctDailySketches]]. Readers merge the stored
-    * summaries — per-term sums + one reduction cut — and answer with
+    * Misra–Gries summary blob (≤ k narrow rows, sub `summary`) and a
+    * 1-row token total (sub `meta`) as one committed delta. Readers
+    * merge the stored summaries — per-term sums + one reduction cut — and answer with
     * lower/upper count bounds; the merged under-count stays ≤
     * N/(k+1) (Agarwal et al., mergeable summaries), so every term
     * with true frequency above N/k is guaranteed present no matter
@@ -729,22 +631,15 @@ object StreamJob {
     * one token pass + a ≤ k-row write; no history rescan, ever. */
   def startHeavyHitterSketches(docs: DataFrame, dir: String,
       checkpointDir: String, k: Int = 200): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val toks = batch
-            .filter(col("text").isNotNull)
-            .select(explode(graft.ops.DedupOps.tokens(col("text")))
-              .as("term"))
-          graft.ops.DocOps.mgSummary(toks, k)
-            .write.mode("overwrite").parquet(s"$dir/b$batchId/summary")
-          toks.agg(count(lit(1)).as("n_tokens"))
-            .write.mode("overwrite").parquet(s"$dir/b$batchId/meta")
-        }
-        ()
-      }
-      .start()
+    startDeltaSink(docs, mgStore(docs.sparkSession, dir), checkpointDir) {
+      batch =>
+        val toks = batch
+          .filter(col("text").isNotNull)
+          .select(explode(graft.ops.DedupOps.tokens(col("text")))
+            .as("term"))
+        Seq(graft.ops.DocOps.mgSummary(toks, k),
+          toks.agg(count(lit(1)).as("n_tokens")))
+    }
 
   /** Heavy hitters answered from the STORED summary blobs only: merged
     * lower bounds plus the ceil(N/k) upper-bound cushion. Contains
@@ -752,9 +647,9 @@ object StreamJob {
     * lies in [c_lb, c_ub]. */
   def heavyHittersFromSketches(spark: SparkSession, dir: String,
       k: Int = 200): DataFrame = {
-    val merged = graft.ops.DocOps.mgReduce(
-      spark.read.parquet(s"$dir/b*/summary"), k)
-    val n = spark.read.parquet(s"$dir/b*/meta")
+    val store = mgStore(spark, dir)
+    val merged = graft.ops.DocOps.mgReduce(store.read("summary"), k)
+    val n = store.read("meta")
       .agg(sum(col("n_tokens")).as("n_total"))
     merged.crossJoin(broadcast(n))
       .select(col("term"), col("c_lb"),

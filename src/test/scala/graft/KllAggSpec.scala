@@ -160,7 +160,7 @@ class KllAggSpec extends SparkSpec {
     // idempotence of n/bounds, not of sketch bytes.)
     StreamJob.kllDelta(batches.head.toDF("created_at", "value"),
         "value", "created_at", 32)
-      .write.mode("overwrite").parquet(s"$dir/b0")
+      .write.mode("overwrite").parquet(s"$dir/b0/blob")
     val after = StreamJob
       .quantilesDailyFromKllBlobs(spark, dir, Seq(0.5), k = 32)
       .collect().map(r => r.getAs[java.sql.Date]("day").toString -> r).toMap

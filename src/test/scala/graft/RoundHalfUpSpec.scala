@@ -105,4 +105,23 @@ class RoundHalfUpSpec extends SparkSpec {
     assert(!classOf[org.apache.spark.sql.catalyst.expressions.codegen
       .CodegenFallback].isAssignableFrom(classOf[RoundHalfUp]))
   }
+
+  test("SQL builder rejects a scale outside [0, 15] with the usage") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.functions.GraftExtensions().apply(ext)
+    val build = org.apache.spark.sql.graft.ColumnShim
+      .registerFunctions(ext, FunctionRegistry.builtin.clone())
+      .lookupFunctionBuilder(FunctionIdentifier("graft_round")).get
+    for (scale <- Seq(20, -1)) {
+      val e = intercept[IllegalArgumentException](
+        build(Seq(Literal(1.5), Literal(scale))))
+      assert(e.getMessage.startsWith("graft_round(x, scale): scale"),
+        e.getMessage)
+      assert(e.getMessage.contains(s"got $scale"), e.getMessage)
+    }
+    assert(build(Seq(Literal(1.25), Literal(1))).eval(null) == 1.3)
+  }
 }

@@ -100,7 +100,7 @@ class StreamJobSpec extends SparkSpec {
     val prepared = StreamJob.prepare(
       ops.TootOps.parseJsonLines(input.toDF()))
     val dir = java.nio.file.Files.createTempDirectory("rollup").toString
-    val store = new StreamJob.ParquetRollupStore(spark, dir)
+    val store = new StreamJob.DeltaStore(spark, dir, Seq("daily"))
     val ckpt = java.nio.file.Files.createTempDirectory("chk").toString
     val batches = Seq(
       // batch 0: two days
@@ -121,7 +121,7 @@ class StreamJobSpec extends SparkSpec {
     def rows(df: DataFrame) = df
       .select(col("day").cast("string"), col("toots"), col("chars"))
       .as[(String, Long, Long)].collect().toSet
-    val got = rows(store.read().get)
+    val got = rows(StreamJob.dailyRollup(store).get)
     // from-scratch recompute over ALL input as one batch — the merge
     // must be indistinguishable from never having been incremental
     val scratch = rows(StreamJob.dailyDelta(StreamJob.prepare(
@@ -135,14 +135,16 @@ class StreamJobSpec extends SparkSpec {
     // replays past the guard, the snapshot is untouched
     val q2 = StreamJob.startIncrementalDaily(prepared, store, ckpt)
     try q2.processAllAvailable() finally q2.stop()
-    assert(store.lastBatchId() == 2L && rows(store.read().get) == scratch)
+    assert(store.lastBatchId() == 2L &&
+      rows(StreamJob.dailyRollup(store).get) == scratch)
 
-    // retention: after 3 merges only the current + one superseded
-    // version directory remain — the store does not grow per batch
-    val versions = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("v"))
-      .map(_.getName).toSet
-    assert(versions == Set("v1", "v2"), versions.toString)
+    // retention: compaction folds the 3 deltas into one c2 base, and
+    // only that base remains — the rollup read from it is unchanged
+    store.compact()
+    val dirs = new java.io.File(dir).listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    assert(dirs == Set("c2"), dirs.toString)
+    assert(rows(StreamJob.dailyRollup(store).get) == scratch)
   }
 
   test("sketch-blob sink: stored-blob distincts ≡ exact, replay-safe") {
@@ -180,6 +182,61 @@ class StreamJobSpec extends SparkSpec {
     val blobDirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("b")).map(_.getName)
     assert(blobDirs.sorted.toSeq == Seq("b0", "b1"), blobDirs.mkString(","))
+
+    // fault injection over a compacted base c1 plus a committed delta
+    // b2 (day 09 gains leo). Each fault holds an extra day-07 user
+    // that readers must never see: a crashed compaction's stray c2
+    // base (the `compacted` pointer never moved), and a crashed batch
+    // b3 whose delta landed but whose commit did not (emulated by
+    // moving `latest` back after the sink wrote it)
+    new StreamJob.DeltaStore(spark, dir, Seq("blob")).compact()
+    val zed = tootJson(9, "2025-10-07 09:00:00", "zed", "z")
+    def sink(rows: String*): Unit = {
+      val q3 = StreamJob.startDistinctDailySketches(prepared, dir, ckpt)
+      try { input.addData(rows: _*); q3.processAllAvailable() }
+      finally q3.stop()
+    }
+    sink(tootJson(8, "2025-10-09 10:00:00", "leo", "h"))
+    val committed =
+      Map("2025-10-07" -> 3L, "2025-10-08" -> 1L, "2025-10-09" -> 1L)
+    assert(readBack() == committed, readBack().toString)
+    val faults = Seq[(String, () => Unit)](
+      "stray c2 base" -> (() => StreamJob.sketchDelta(StreamJob.prepare(
+        ops.TootOps.parseJsonLines(Seq(zed).toDF("value"))))
+        .write.parquet(s"$dir/c2/blob")),
+      "uncommitted b3 delta" -> { () =>
+        sink(zed)
+        java.nio.file.Files.write(java.nio.file.Paths.get(dir, "latest"),
+          "2\n".getBytes("UTF-8"))
+      })
+    for ((fault, inject) <- faults) {
+      inject()
+      assert(readBack() == committed, s"$fault: ${readBack()}")
+    }
+    assert(new java.io.File(s"$dir/b3").isDirectory)
+  }
+
+  test("atomic pointer commit: no temp file survives a commit, and a " +
+      "torn latest.tmp is ignored, then overwritten") {
+    val dir = java.nio.file.Files.createTempDirectory("ptr").toString
+    val store = new StreamJob.DeltaStore(spark, dir, Seq("x"))
+    def commit(id: Long): Unit = store.writeDelta(Seq(Seq(id).toDF("x")), id)
+    def tmps() = new java.io.File(dir).list().filter(_.endsWith(".tmp")).toSeq
+    def ids() = store.readSub("x").get.as[Long].collect().sorted.toSeq
+    (0L to 2L).foreach(commit)
+    store.compact()
+    commit(3L)
+    assert(tmps().isEmpty, tmps().toString)
+    assert(store.lastBatchId() == 3L && store.compactedId() == 2L)
+    // a crash mid pointer write: the torn bytes sit in latest.tmp,
+    // never in latest, so the committed id survives a restart
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "latest.tmp"),
+      "4-to".getBytes("UTF-8"))
+    assert(store.lastBatchId() == 3L && ids() == (0L to 3L))
+    // the next batch commits straight over the stale temp file
+    commit(4L)
+    assert(store.lastBatchId() == 4L && tmps().isEmpty, tmps().toString)
+    assert(ids() == (0L to 4L))
   }
 
   test("bitmap-blob sink: stored-blob distincts are EXACT, replay-safe") {
